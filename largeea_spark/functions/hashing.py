@@ -34,19 +34,23 @@ def minhash_signature(token_array_col: str | Column, num_perm: int = 128) -> Col
     return sig
 
 
-def lsh_band_keys(sig_col: str | Column, bands: int = 32, rows: int = 4) -> Column:
-    """Signature → array<struct<band int, key bigint>> of band bucket keys.
+def lsh_band_keys(sig_col: str, bands: int = 32, rows: int = 4) -> Column:
+    """Signature column (by name) → array<struct<band int, key bigint>>
+    of band bucket keys, key = xxhash64(band, sig[band*rows .. +rows-1]).
 
     bands*rows must equal the signature length. Threshold ≈ (1/b)^(1/r);
     defaults (32, 4) → ≈0.42, chosen to over-generate vs the reference's
     Jaccard 0.5 (`text_sim.py:194-196`), SURVEY.md §7.4.6.
+
+    Built as ONE SQL expression string: the int literals hash exactly as
+    ``F.lit(b)`` does, and one parse replaces the ~200 py4j calls of
+    building the same tree Column by Column.
     """
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
     entries = []
     for b in range(bands):
-        key = F.xxhash64(F.lit(b), *[sig[b * rows + r] for r in range(rows)])
-        entries.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return F.array(*entries)
+        cells = ", ".join(f"`{sig_col}`[{b * rows + r}]" for r in range(rows))
+        entries.append(f"named_struct('band', {b}, 'key', xxhash64({b}, {cells}))")
+    return F.expr(f"array({', '.join(entries)})")
 
 
 def minhash_signature_agg(df: DataFrame, id_col: str, token_array_col: str,
@@ -56,18 +60,13 @@ def minhash_signature_agg(df: DataFrame, id_col: str, token_array_col: str,
     (the pure-expression `minhash_signature` traverses the array once
     per permutation, which hurts on long documents). One shuffle on id;
     map-side partial mins keep it small. Docs with zero tokens drop out
-    (they have no signature)."""
+    (they have no signature). The aggregate list is one SQL expression
+    string (see `lsh_band_keys`), hashing exactly as `minhash_signature`."""
     toks = df.select(
         F.col(id_col), F.explode(F.array_distinct(F.col(token_array_col))).alias("tok")
     )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("tok"))).alias(f"h{i}")
-        for i in range(num_perm)
-    ]
-    wide = toks.groupBy(id_col).agg(*aggs)
-    return wide.select(
-        F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig")
-    )
+    mins = ", ".join(f"min(xxhash64({i}, tok))" for i in range(num_perm))
+    return toks.groupBy(id_col).agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def explode_band_keys(

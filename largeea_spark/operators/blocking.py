@@ -66,12 +66,14 @@ def minhash_candidates(
 
 def _cap_buckets(bk: DataFrame, max_bucket: int, stats: dict | None = None,
                  side: int = 0) -> DataFrame:
+    # the band-key table is computed once (its num_perm-min aggregate is
+    # the expensive part); the counts, the hot-bucket summary and the
+    # keep filter below all read the materialised rows
+    bk = bk.localCheckpoint(eager=False)
+    # groupBy count (map-side partial counts), not a window: a hot
+    # bucket is never sorted inside one task
     counts = bk.groupBy("band", "key").count()
     if stats is not None:
-        # materialize the counts ONCE (localCheckpoint) so the eager
-        # stats action and the keep filter share one band-key groupBy
-        # instead of paying the shuffle twice for observability
-        counts = counts.localCheckpoint(eager=True)
         row = (
             counts.where(F.col("count") > max_bucket)
             .agg(F.count("*").alias("nb"),

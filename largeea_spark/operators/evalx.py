@@ -29,6 +29,8 @@ row carries ≥k entries (the kNN channels always emit exactly k).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from . import simops
@@ -62,17 +64,24 @@ def hits_and_mrr(
         if n_src is None:
             n_src = (sim.agg(F.max(SRC)).first()[0] or 0) + 1
         fail_rank = int(n_src / 2)
-    # reference rank is 0-based with fail substituted, MRR=mean(1/(rank+1))
-    rank0 = F.coalesce(F.col("rank") - 1, F.lit(fail_rank))
-    aggs = [F.avg(1.0 / (rank0 + 1)).alias("MRR")]
+    # reference rank is 0-based with fail substituted, MRR=mean(1/(rank+1)).
+    # Aggregated as an integer histogram of the 1-based rank (null = gold
+    # absent from the top-k) and summed in Python with fsum (exactly
+    # rounded, so no summation order): a distributed avg of doubles adds
+    # in partition order, and the same rows in another file layout could
+    # move MRR in the last digit.
+    hist = {r["rank"]: r["count"] for r in joined.groupBy("rank").count().collect()}
+    total = sum(hist.values())
+    if total == 0:
+        # zero gold links: report 0.0 (cf. sparse_acc empty-denominator
+        # behavior, eval.py:133-148)
+        return {"MRR": 0.0, **{f"hits@{k}": 0.0 for k in ks}}
+    out = {"MRR": math.fsum(c / (fail_rank + 1 if rank is None else rank)
+                            for rank, c in hist.items()) / total}
     for k in ks:
-        aggs.append(
-            F.avg(F.when(F.col("rank") <= k, 1.0).otherwise(0.0)).alias(f"hits@{k}")
-        )
-    row = joined.agg(*aggs).first().asDict()
-    # zero gold links → SQL avg returns null; report 0.0 (cf. sparse_acc
-    # empty-denominator behavior, eval.py:133-148)
-    return {k: (float(v) if v is not None else 0.0) for k, v in row.items()}
+        out[f"hits@{k}"] = sum(c for rank, c in hist.items()
+                               if rank is not None and rank <= k) / total
+    return out
 
 
 def precision_recall_f1(pred_pairs: DataFrame, gold_pairs: DataFrame,

@@ -10,11 +10,22 @@ metadata-only read. (Iceberg would add snapshot isolation on a real
 cluster; the sandbox has no Iceberg jars — the layout and API below are
 format-agnostic, `format=` is pluggable.)
 
-Lineage: alongside each stage, a ``_lineage`` table records one row per
-OUTPUT PARTITION (spark_partition_id): row count + min/max of the first
-output column + wall-clock — enough to audit which partition produced
-what, per the north rule. A ``_metrics`` table accumulates one row per
-stage run (S7, `log_information` `main.py:219-239`).
+Bookkeeping costs no Spark job beyond the stage write and its read-back:
+
+- Lineage: the write records its wall-clock in a ``_lineage.json``
+  sidecar inside the stage directory (Spark readers skip ``_`` files).
+  ``lineage(name)`` computes one row per partition of the persisted
+  stage (spark_partition_id: row count + min/max of the first column)
+  when it is called — enough to audit which partition produced what,
+  per the north rule.
+- Metrics: ``log_metrics`` appends one JSON line per stage run to
+  ``_metrics_log/metrics.jsonl`` under the store root (S7, `log_information`
+  `main.py:219-239`); ``metrics()`` reads the lines back with an
+  explicit schema.
+
+The root must be a local (POSIX) path: ``exists`` and the sidecars use
+the ``os`` file API. ``TableStageStore`` (catalog tables) keeps its own
+lineage and metrics tables.
 """
 
 from __future__ import annotations
@@ -22,9 +33,19 @@ from __future__ import annotations
 import json
 import os
 import time
+from datetime import datetime, timezone
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+_LINEAGE_FILE = "_lineage.json"
+_METRICS_DIR = "_metrics_log"
+_METRICS_SCHEMA = "stage string, metrics string, logged_at timestamp"
+
+
+def _now_iso() -> str:
+    """UTC wall-clock in the ISO form Spark's JSON reader parses."""
+    return datetime.now(timezone.utc).isoformat(timespec="milliseconds")
 
 
 class StageStore:
@@ -50,13 +71,21 @@ class StageStore:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(self._path(name))
-        out = self.read(name)
-        self._write_lineage(name, out, time.time() - t0)
-        return out
+        # the overwrite removed any older sidecar along with the old stage
+        with open(f"{self._path(name)}/{_LINEAGE_FILE}", "w") as f:
+            json.dump({"wall_sec": round(time.time() - t0, 3),
+                       "written_at": _now_iso()}, f)
+        return self.read(name)
 
-    def _write_lineage(self, name: str, out: DataFrame, wall_sec: float) -> None:
+    def lineage(self, name: str) -> DataFrame:
+        """Per output partition of the persisted stage: ``partition_id,
+        rows, min_key, max_key`` (first column, as string), plus the
+        write's ``stage, wall_sec, written_at``."""
+        with open(f"{self._path(name)}/{_LINEAGE_FILE}") as f:
+            side = json.load(f)
+        out = self.read(name)
         first_col = out.columns[0]
-        lin = (
+        return (
             out.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(
                 F.count("*").alias("rows"),
@@ -64,13 +93,9 @@ class StageStore:
                 F.max(F.col(first_col).cast("string")).alias("max_key"),
             )
             .withColumn("stage", F.lit(name))
-            .withColumn("wall_sec", F.lit(round(wall_sec, 3)))
-            .withColumn("written_at", F.current_timestamp())
+            .withColumn("wall_sec", F.lit(side["wall_sec"]))
+            .withColumn("written_at", F.to_timestamp(F.lit(side["written_at"])))
         )
-        lin.write.format(self.fmt).mode("overwrite").save(self._path(f"{name}__lineage"))
-
-    def lineage(self, name: str) -> DataFrame:
-        return self.read(f"{name}__lineage")
 
     def checkpoint(self, name: str, build: Callable[[], DataFrame],
                    partition_by: list[str] | None = None) -> DataFrame:
@@ -82,15 +107,19 @@ class StageStore:
 
     def log_metrics(self, stage: str, metrics: dict) -> None:
         """S7 metrics sink (`log_information` `main.py:219-239`):
-        append one JSON row per stage run."""
-        row = self.spark.createDataFrame(
-            [(stage, json.dumps(metrics, sort_keys=True, default=str))],
-            "stage string, metrics string",
-        ).withColumn("logged_at", F.current_timestamp())
-        row.write.format(self.fmt).mode("append").save(self._path("_metrics"))
+        append one JSON line per stage run; starts no Spark job."""
+        os.makedirs(self._path(_METRICS_DIR), exist_ok=True)
+        line = json.dumps({
+            "stage": stage,
+            "metrics": json.dumps(metrics, sort_keys=True, default=str),
+            "logged_at": _now_iso(),
+        })
+        with open(f"{self._path(_METRICS_DIR)}/metrics.jsonl", "a") as f:
+            f.write(line + "\n")
 
     def metrics(self) -> DataFrame:
-        return self.read("_metrics")
+        """One row per ``log_metrics`` call: ``stage, metrics, logged_at``."""
+        return self.spark.read.schema(_METRICS_SCHEMA).json(self._path(_METRICS_DIR))
 
 
 class TableStageStore(StageStore):

@@ -1,28 +1,43 @@
-"""Generate a synthetic sf1.0-LIKE dataset at /root/synthdata/sf1x for
-performance smoke tests only (NOT oracle-comparable — the driver's real
-sf1.0 generator is not available). Approximates the driver's scaling:
+"""Generate a synthetic sf1.0-LIKE dataset for performance smoke tests
+only (NOT oracle-comparable — the real sf1.0 generator is not
+available). Approximates the sf1.0 scaling:
 
-- documents: keep the 5,000 sf0.1 docs (real near-dup structure) + 45,000
+- documents: keep the sf0.1 docs (real near-dup structure) + 45,000
   new docs sampled from the empirical word-unigram and doc-length
-  distributions (seeded) — reproduces the ~28k-distinct-3-gram / df~x10
-  candidate-volume structure that drives cc_dedup & minhash cost.
+  distributions (seeded), with ids after the largest existing doc_id —
+  reproduces the ~28k-distinct-3-gram / df~x10 candidate-volume
+  structure that drives cc_dedup & minhash cost.
 - embeddings: keep 2,000 + 18,000 new unit-ish vectors sampled from the
   empirical component distribution (d=64) — drives emb_knn cost (20k x 20k).
 - lineitem: 10 replicas with offset order/part/supp keys — drives tpch_q1
   and window_topk scan/agg cost (6M rows).
+
+Usage: python scripts/gen_synth_sf1x.py [--in SF0.1_DIR] [--out OUT_DIR]
 """
-import numpy as np
-import pandas as pd
-import pyarrow.parquet as pq
-import pyarrow as pa
+import argparse
 import os
 
-OUT = "/root/synthdata/sf1x"
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+SRC = os.path.expanduser("~/testdata/sf0.1")
+OUT = os.path.expanduser("~/synthdata/sf1x")
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("--in", dest="src", default=SRC,
+                help=f"sf0.1 dataset directory to grow from (default {SRC})")
+ap.add_argument("--out", default=OUT, help=f"output directory (default {OUT})")
+args = ap.parse_args()
+SRC, OUT = args.src, args.out
 os.makedirs(OUT, exist_ok=True)
 rng = np.random.default_rng(20260822)
 
 # ---------------- documents ----------------
-docs = pq.read_table("/root/testdata/sf0.1/documents.parquet").to_pandas()
+docs = pq.read_table(f"{SRC}/documents.parquet").to_pandas()
+if docs.doc_id.nunique() != len(docs):
+    raise SystemExit(f"{SRC}/documents.parquet: doc_id is not unique")
+base_id = int(docs.doc_id.max()) + 1
 all_words = []
 lengths = []
 for txt in docs.text:
@@ -42,17 +57,18 @@ for i in range(n_new):
     L = int(lens[i])
     words = rng.choice(vocab, size=L, p=probs)
     text = " ".join(words)
-    new_rows.append((5000 + i, text, langs[i % len(langs)],
+    new_rows.append((base_id + i, text, langs[i % len(langs)],
                      sources[i % len(sources)], len(text)))
 new = pd.DataFrame(new_rows, columns=["doc_id", "text", "lang", "source", "n_chars"])
 new["n_chars"] = new["n_chars"].astype("int64")
 out_docs = pd.concat([docs, new], ignore_index=True)
+assert out_docs.doc_id.is_unique
 pq.write_table(pa.Table.from_pandas(out_docs, preserve_index=False),
                f"{OUT}/documents.parquet")
 print("documents:", len(out_docs))
 
 # ---------------- embeddings ----------------
-emb = pq.read_table("/root/testdata/sf0.1/embeddings.parquet").to_pandas()
+emb = pq.read_table(f"{SRC}/embeddings.parquet").to_pandas()
 d = len(emb.embedding.iloc[0])
 base = np.array(emb.embedding.tolist(), dtype=np.float32)
 n_new_e = 18_000
@@ -74,7 +90,7 @@ pq.write_table(pa.Table.from_pandas(out_emb, schema=schema, preserve_index=False
 print("embeddings:", len(out_emb))
 
 # ---------------- lineitem ----------------
-li = pq.read_table("/root/testdata/sf0.1/lineitem.parquet")
+li = pq.read_table(f"{SRC}/lineitem.parquet")
 n = li.num_rows
 frames = []
 lp = li.to_pandas()

@@ -98,6 +98,27 @@ def test_hits_mrr_and_accuracy(spark):
     assert math.isclose(acc, 2 / 3)
 
 
+def test_hits_mrr_independent_of_layout(spark):
+    """Same sim rows in 1 or 7 partitions → bit-identical metric dicts
+    (MRR summed from an integer rank histogram, not a partition-order
+    float average)."""
+    rng = np.random.default_rng(11)
+    rows = [(s, d, float(rng.random())) for s in range(300) for d in range(60)
+            if rng.random() < 0.7]
+    sim = spark.createDataFrame(rows, "src long, dst long, sim double")
+    links = spark.createDataFrame(
+        [(s, int(rng.integers(0, 60))) for s in range(300)] + [(470, 3)],
+        "e1 long, e2 long")
+    got = [
+        evalx.hits_and_mrr(sim.repartition(n), links.repartition(n),
+                           ks=(1, 5, 50), n_src=1000)
+        for n in (1, 7)
+    ]
+    assert got[0] == got[1]
+    assert list(got[0]) == ["MRR", "hits@1", "hits@5", "hits@50"]
+    assert 0 < got[0]["MRR"] < 1
+
+
 def test_precision_recall(spark):
     pred = spark.createDataFrame([(1, 1), (2, 2)], "e1 long, e2 long")
     gold = spark.createDataFrame([(1, 1), (3, 3)], "e1 long, e2 long")

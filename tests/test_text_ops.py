@@ -1,7 +1,9 @@
 """TF-IDF (sklearn parity), text stats, fingerprint, extraction plan,
 stage-store resume, streaming ingest."""
 
+import json
 import math
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,6 +127,57 @@ def test_stage_store_resume(spark, tmp_path):
     assert lin.agg(F.sum("rows")).first()[0] == 100
     store.log_metrics("stage_a", {"rows": 100})
     assert store.metrics().count() == 1
+
+
+def _jobs_in(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs (job group + status tracker)."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_store_bookkeeping_launches_no_jobs(spark, tmp_path):
+    """log_metrics launches no Spark job; checkpoint launches only the
+    jobs of its stage write and read-back; resume only the read-back;
+    metrics()/lineage() keep their columns."""
+    store = StageStore(spark, str(tmp_path / "jobs"))
+    df = spark.range(50).withColumnRenamed("id", "x")
+
+    assert _jobs_in(spark, lambda: store.log_metrics("s", {"rows": 50})) == 0
+
+    ref = str(tmp_path / "ref")
+    n_write_read = _jobs_in(
+        spark, lambda: (df.write.parquet(ref), spark.read.parquet(ref)))
+    n_read = _jobs_in(spark, lambda: spark.read.parquet(ref))
+    assert _jobs_in(spark, lambda: store.checkpoint("s", lambda: df)) == n_write_read
+
+    def no_rebuild():
+        raise AssertionError("resume rebuilt a complete stage")
+
+    assert _jobs_in(spark, lambda: store.checkpoint("s", no_rebuild)) == n_read
+
+    m = store.metrics()
+    assert m.columns == ["stage", "metrics", "logged_at"]
+    assert dict(m.dtypes)["logged_at"] == "timestamp"
+    (row,) = m.collect()
+    assert row.stage == "s" and json.loads(row.metrics) == {"rows": 50}
+    assert row.logged_at is not None
+
+    lin = store.lineage("s")
+    assert lin.columns == ["partition_id", "rows", "min_key", "max_key",
+                           "stage", "wall_sec", "written_at"]
+    assert dict(lin.dtypes)["written_at"] == "timestamp"
+    agg = lin.agg(F.sum("rows"), F.min(F.col("min_key").cast("long")),
+                  F.max(F.col("max_key").cast("long"))).first()
+    assert tuple(agg) == (50, 0, 49)
+    assert {r.stage for r in lin.collect()} == {"s"}
 
 
 def test_streaming_ingest_available_now(spark, tmp_path):
